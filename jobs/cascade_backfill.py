@@ -12,9 +12,12 @@ cluster sizes.  Package and run:
         --root   <output tables root> \\
         --buckets 64
 
-Re-running with the same --root resumes: (tier, bucket) units already in
-the lineage log are skipped; a unit whose data was written but whose
-lineage commit did not land is redone idempotently (overwrite).
+Each tier is one Spark write job over all of its pending buckets
+(``partitionBy("bucket_id")``, dynamic partition overwrite), followed by
+one lineage record per bucket.  Re-running with the same --root resumes:
+(tier, bucket) units already in the lineage log are skipped; a unit
+whose data was written but whose lineage commit did not land is redone
+idempotently (its partition is overwritten).
 
 The session comes from spark-submit (no master/parallelism hardcoded
 here); only shuffle partitioning is derived from the cluster it lands on.
@@ -37,21 +40,11 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64,
                     help="conv_id hash buckets = resume/commit granularity")
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--parallelism", type=int, default=4,
-                    help="concurrent bucket chains (1 = serial); the "
-                         "commit protocol is per unit, so resume "
-                         "semantics are identical at any setting")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.appName("ts-cascade-backfill")
-        # FAIR mode so the per-bucket scheduler pools actually isolate
-        # straggler chains (pool names are inert under FIFO)
-        .config("spark.scheduler.mode", "FAIR")
-        .getOrCreate()
-    )
+    spark = SparkSession.builder.appName("ts-cascade-backfill").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from ts_process_spark.plans.backfill import TableSet, backfill, verify_lineage
@@ -65,8 +58,7 @@ def main() -> None:
         raw = spark.read.parquet(args.input)
 
     t0 = time.time()
-    result = backfill(spark, raw, TableSet(args.root), n_buckets=args.buckets,
-                      parallelism=args.parallelism)
+    result = backfill(spark, raw, TableSet(args.root), n_buckets=args.buckets)
     wall = time.time() - t0
     problems = verify_lineage(spark, TableSet(args.root))
     n_turns = sum(r["rows_in"] for r in TableSet(args.root).read_lineage()

@@ -3,6 +3,8 @@ identical final state and no double-processing (SURVEY §5.4)."""
 
 from __future__ import annotations
 
+import shutil
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -72,28 +74,42 @@ def test_lineage_detects_tamper(spark, raw, tmp_path):
     assert any("1d/0" in p for p in problems)
 
 
-def test_backfill_parallel_matches_serial(spark, raw, tmp_path):
-    """parallelism=4 must produce the SAME committed set and per-unit
-    value hashes as the serial run (bucket chains are independent; the
-    commit protocol is per unit), and resuming a parallel backfill must
-    skip everything."""
-    ser = TableSet(str(tmp_path / "ser"))
-    par = TableSet(str(tmp_path / "par"))
-    backfill(spark, raw, ser, n_buckets=N_BUCKETS)
-    r = backfill(spark, raw, par, n_buckets=N_BUCKETS, parallelism=4)
-    assert r["committed"] == 3 * N_BUCKETS
+def test_lineage_reports_deleted_partition(spark, raw, tmp_path):
+    """A committed partition whose directory is gone is drift, not a
+    crash of the sweep."""
+    tables = TableSet(str(tmp_path / "t3"))
+    backfill(spark, raw, tables, n_buckets=N_BUCKETS)
+    shutil.rmtree(tables.partition_dir("1h", 1))
+    assert verify_lineage(spark, tables) == ["1h/1: rowcount drift"]
 
-    def key_hashes(t):
-        return {
-            (rec["tier"], rec["bucket_id"]): (rec["rows_out"], rec["value_hash"])
-            for rec in t.read_lineage()
-        }
 
-    assert key_hashes(par) == key_hashes(ser)
-    assert verify_lineage(spark, par) == []
+def test_backfill_crash_mid_tier_lineage(spark, raw, tmp_path):
+    """A crash partway through one tier's lineage appends: the resume
+    redoes only that tier's uncommitted buckets and the coarser tiers."""
+    tables = TableSet(str(tmp_path / "t4"))
+    # 1m commits all 4 buckets, 1h commits 2, the crash lands on the 7th
+    r1 = backfill(spark, raw, tables, n_buckets=N_BUCKETS, fail_after=7)
+    assert r1.get("crashed") and r1["committed"] == 6
+    assert len(tables.committed()) == 6
 
-    r2 = backfill(spark, raw, par, n_buckets=N_BUCKETS, parallelism=4)
-    assert r2["skipped"] == 3 * N_BUCKETS and r2["committed"] == 0
+    r2 = backfill(spark, raw, tables, n_buckets=N_BUCKETS)
+    assert r2["skipped"] == 6 and r2["committed"] == 3 * N_BUCKETS - 6
+    assert len(tables.read_lineage()) == 3 * N_BUCKETS
 
-    with pytest.raises(ValueError):
-        backfill(spark, raw, par, n_buckets=N_BUCKETS, parallelism=2, fail_after=1)
+    direct = full_cascade(raw)
+    for tier in ("1m", "1h", "1d"):
+        got = _tier_frame(tables.read_tier(spark, tier))
+        exp = _tier_frame(direct[tier])
+        pd.testing.assert_frame_equal(got, exp)
+    assert verify_lineage(spark, tables) == []
+
+
+def test_backfill_empty_input(spark, raw, tmp_path):
+    """No input rows: every unit commits as (0, 0, 0) and verifies clean,
+    though a partitioned write leaves no bucket directory to read back."""
+    tables = TableSet(str(tmp_path / "t5"))
+    r = backfill(spark, raw.limit(0), tables, n_buckets=2)
+    assert r == {"committed": 6, "skipped": 0}
+    assert {(x["rows_in"], x["rows_out"], x["value_hash"])
+            for x in tables.read_lineage()} == {(0, 0, 0)}
+    assert verify_lineage(spark, tables) == []

@@ -407,3 +407,25 @@ def test_concat_blobs_expr_matches_python_form(spark, raw_df):
             assert set(got) == set(exp)
             bad = [k for k in got if got[k] != exp[k]]
             assert not bad, (tier, kw, bad[:3])
+
+
+def test_le4_raises_out_of_range_without_ansi(spark):
+    """_le4 fails loudly on a value outside [0, 2^31-1] even with ANSI
+    off, where an int cast wraps silently: 2^31 cast to int used to
+    encode as FFFFFFFF, the container sentinel."""
+    import struct
+
+    from ts_process_spark.operators.rollup import _le4
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        one = spark.range(1)
+        for ok in (0, 7, 2**31 - 1):
+            got = one.select(_le4(F.lit(ok))).first()[0]
+            assert bytes(got) == struct.pack("<I", ok)
+        for bad in (F.lit(2**31).cast("int"), F.lit(2**31), F.lit(-1)):
+            with pytest.raises(Exception, match="_le4"):
+                one.select(_le4(bad)).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -761,17 +761,6 @@ def filter_data(
 # ---------------------------------------------------------- resampling
 
 
-def interp_linear(data: np.ndarray, old_dt: float, new_dt: float) -> np.ndarray:
-    """Linear resample to the new grid over the same duration (the
-    linear InterpTime kernel, rotd50.f:284-305; also the engine's
-    gap-fill rule)."""
-    n = len(data)
-    old_t = np.arange(n) * old_dt
-    new_t = np.arange(0, n * old_dt, new_dt)
-    new_t = new_t[new_t <= old_t[-1] + 1e-12]
-    return np.interp(new_t, old_t, data)
-
-
 def sinc_interp(data: np.ndarray, old_dt: float, new_dt: float) -> np.ndarray:
     """Whittaker–Shannon dense-matrix interpolation — the reference's
     non-integer resample path (ts_library.py:927-935).  O(n_old·n_new)

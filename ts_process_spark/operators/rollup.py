@@ -52,11 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ts_process_spark.functions.codecs import (
-    concat_blobs,
-    encode_dod_batch,
-    encode_gorilla_batch,
-)
+from ts_process_spark.functions.codecs import encode_dod_batch, encode_gorilla_batch
 from ts_process_spark.operators.gapfill import gapfill_ts
 
 TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
@@ -109,28 +105,25 @@ def _encode_gorilla_udf(val_arrays: pd.Series) -> pd.Series:
     return pd.Series(encode_gorilla_batch(concat, lengths), index=val_arrays.index)
 
 
-@F.pandas_udf(T.BinaryType())
-def _concat_blobs_udf(blob_arrays: pd.Series) -> pd.Series:
-    # cascade = pure byte-level chunk concatenation (no decode/re-encode;
-    # the Gorilla-deployment immutable-chunk pattern) — see
-    # codecs.concat_blobs; decode_* reads containers transparently.
-    # r9: no longer on the cascade path (replaced by the pure-JVM
-    # _concat_blobs_expr below — the Python eval node itself was ~40% of
-    # the 1h/1d tier jobs, and an arrow_udf twin measured the same, so
-    # the boundary, not per-row Python, was the cost); kept as the
-    # reference form tests pin _concat_blobs_expr against.
-    return blob_arrays.map(lambda blobs: concat_blobs(list(blobs)))
-
-
 _SENTINEL_LE = b"\xff\xff\xff\xff"  # struct.pack('<I', codecs._CHUNK_SENTINEL)
 
 
 def _le4(x) -> F.Column:
-    """Little-endian uint32 bytes of a non-negative int column —
-    byte-identical to ``struct.pack('<I', x)`` for x < 2^31 (all chunk
-    counts/lengths here).  hex() of the int, zero-padded to 8 nibbles,
-    decoded big-endian, then byte-reversed — every step a codegen
-    built-in (guide §4.1), no Python."""
+    """Little-endian uint32 bytes of an integral column —
+    byte-identical to ``struct.pack('<I', x)`` for 0 <= x < 2^31 (all
+    chunk counts/lengths here).  hex() of the int, zero-padded to 8
+    nibbles, decoded big-endian, then byte-reversed — every step a
+    codegen built-in (guide §4.1), no Python.
+
+    Out-of-range values raise at execution whatever the session's ANSI
+    setting: without the guard a negative (or wrapped ``int`` cast)
+    value's 16-nibble hex would be truncated by lpad into wrong bytes —
+    for 2^31 cast to int, exactly the 0xFFFFFFFF container sentinel."""
+    x = F.when(
+        (x < 0) | (x > 2**31 - 1),
+        F.raise_error(F.concat(F.lit("_le4: value out of [0, 2^31-1]: "),
+                               x.cast("string"))),
+    ).otherwise(x)
     be = F.to_binary(F.lpad(F.hex(x), 8, "0"), F.lit("hex"))
     return F.concat(*[F.substring(be, i, 1) for i in (4, 3, 2, 1)])
 
@@ -190,7 +183,7 @@ def _concat_blobs_expr(children, field: str, container: bool) -> F.Column:
         )
         body = bcat(F.transform(children, lambda c: c[field]))
     return F.concat(
-        F.lit(_SENTINEL_LE), _le4(total_n.cast("int")), lens, body
+        F.lit(_SENTINEL_LE), _le4(total_n), lens, body
     )
 
 

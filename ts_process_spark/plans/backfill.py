@@ -11,15 +11,21 @@ per-partition lineage + metrics"):
   Iceberg's ``bucket(N, conv_id)`` partition transform; time-range
   pruning inside a bucket comes from parquet row-group stats after
   ``sortWithinPartitions(conv_id, bucket_ts)``.
-- **Commit protocol**: for each pending (tier, bucket): write the tier
-  partition directory (an idempotent full overwrite of that directory),
-  THEN append the lineage record.  A crash between the two leaves a
-  partition without lineage — the re-run simply overwrites it.  Lineage
-  is the source of truth for completeness, never the data files.
+- **One write job per tier**: a tier's pending buckets are rolled up
+  together and written with ``partitionBy("bucket_id")`` under dynamic
+  partition overwrite (committed buckets untouched), after a
+  ``repartition("bucket_id")`` that keeps one file per bucket.
+- **Commit protocol**: per tier, data first, THEN one lineage record
+  per pending bucket.  A crash between the two (or partway through the
+  records) leaves partitions without lineage — the re-run redoes just
+  those buckets, idempotently.  Lineage is the source of truth for
+  completeness, never the data files.
 - **Lineage row**: run_id, tier, bucket_id, rows_in, rows_out,
   value_hash (xor-fold of row xxhash64s — order-independent, cheap to
-  verify), started/committed wall times.  ``resume`` = anti-join of the
-  pending set against committed lineage keys.
+  verify), started/committed wall times.  rows_out and value_hash come
+  from one grouped job over the written partitions, rows_in from raw
+  (1m) or the previous tier's rows_out.  ``resume`` = the pending set
+  minus the committed lineage keys.
 
 On a real cluster this layer sits on Iceberg (snapshot ids instead of
 directory overwrites); the jar is not in this sandbox, so the same
@@ -49,25 +55,18 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def value_hash(df: DataFrame, cols: list[str]) -> int:
-    """Order-independent content hash: bit-xor fold of per-row xxhash64
-    over the checked columns (blob columns excluded — codec
-    correctness is tested separately, SURVEY §7.4.5)."""
-    return count_and_hash(df, cols)[1]
+def _hash_aggs(cols: list[str]) -> list:
+    """(row count, value_hash): value_hash is the bit-xor fold of per-row
+    xxhash64 over the checked columns — order-independent (blob columns
+    excluded — codec correctness is tested separately, SURVEY §7.4.5)."""
+    h = F.xxhash64(*cols)
+    return [F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.bit_xor(h), F.lit(0)).alias("x")]
 
 
 def count_and_hash(df: DataFrame, cols: list[str]) -> tuple[int, int]:
-    """(row count, value_hash) in ONE aggregation job — the commit and
-    verify paths each need both, and two separate actions doubled the
-    post-write read cost per unit (review finding)."""
-    row = (
-        df.select(F.xxhash64(*cols).alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("coalesce(bit_xor(h), 0)").alias("x"),
-        )
-        .first()
-    )
+    """(row count, value_hash) of a whole frame in ONE aggregation job."""
+    row = df.agg(*_hash_aggs(cols)).first()
     return int(row["n"]), int(row["x"])
 
 
@@ -119,118 +118,112 @@ class TableSet:
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         return spark.read.parquet(self.tier_dir(tier))
 
+    def read_buckets(
+        self, spark: SparkSession, tier: str, buckets: list[int]
+    ) -> DataFrame | None:
+        """The tier's rows in ``buckets``; None when none of them has a
+        partition directory (a partitioned write leaves none for a
+        bucket without rows)."""
+        present = [b for b in buckets if os.path.isdir(self.partition_dir(tier, b))]
+        if not present:
+            return None
+        return self.read_tier(spark, tier).where(F.col("bucket_id").isin(present))
+
+
+def bucket_hashes(
+    spark: SparkSession, tables: TableSet, tier: str, buckets: list[int]
+) -> dict[int, tuple[int, int]]:
+    """{bucket_id: (row count, value_hash)} of a tier's ``buckets`` in ONE
+    grouped job; a bucket with no rows is absent (read it as ``(0, 0)``)."""
+    df = tables.read_buckets(spark, tier, buckets)
+    if df is None:
+        return {}
+    rows = df.groupBy("bucket_id").agg(*_hash_aggs(HASH_COLS)).collect()
+    return {r["bucket_id"]: (int(r["n"]), int(r["x"])) for r in rows}
+
 
 def backfill(
     spark: SparkSession,
     raw: DataFrame,
     tables: TableSet,
     n_buckets: int = 8,
-    max_units: int | None = None,
     fail_after: int | None = None,
-    parallelism: int = 1,
+    parallelism: int = 1,  # ignored (one job per tier); existing callers pass it
 ) -> dict:
-    """Run (or resume) the raw→1m→1h→1d cascade bucket by bucket.
+    """Run (or resume) the raw→1m→1h→1d cascade, one write job per tier
+    over the tier's pending buckets.
 
-    ``max_units`` / ``fail_after`` exist for the resume tests: stop after
-    N (tier, bucket) commits, simulating a mid-backfill crash (serial
-    mode only).  Returns {"committed": k, "skipped": s}.
-
-    ``parallelism > 1`` runs BUCKET CHAINS concurrently (round-2 VERDICT
-    #6): buckets are independent by construction (whole conversations
-    per bucket), so each worker thread drives its own chain of Spark
-    jobs — tiers stay ordered within a bucket, the lineage append is the
-    only serialized step (one lock), and each thread tags its jobs with
-    a scheduler pool so a straggler bucket can't starve the rest.  The
-    commit protocol (overwrite THEN lineage) is per unit and unchanged,
-    so crash-resume semantics are identical at any parallelism."""
-    import threading
-
+    ``fail_after`` exists for the resume tests: crash before the Nth
+    lineage append of this run — after that tier's data write —
+    simulating a mid-backfill crash.  Returns {"committed": k,
+    "skipped": s}, plus "crashed": True on a simulated crash."""
     run_id = uuid.uuid4().hex[:12]
     os.makedirs(tables.root, exist_ok=True)
-    done = tables.committed()
-    bucketed = with_bucket(raw, n_buckets)
-    if parallelism > 1 and (max_units is not None or fail_after is not None):
-        raise ValueError("crash-simulation knobs require parallelism=1")
-
-    lock = threading.Lock()
+    done = {(r["tier"], r["bucket_id"]): r for r in tables.read_lineage()}
     counts = {"committed": 0, "skipped": 0}
-
-    def run_bucket(bucket_id: int) -> bool:
-        """One bucket's tier chain; returns False on early stop."""
-        if parallelism > 1:
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"backfill-{bucket_id % parallelism}"
+    for i, tier in enumerate(TIER_ORDER):
+        pending = [b for b in range(n_buckets) if (tier, b) not in done]
+        counts["skipped"] += n_buckets - len(pending)
+        if not pending:
+            continue
+        started = time.time()
+        if tier == "1m":
+            src = with_bucket(raw, n_buckets).where(F.col("bucket_id").isin(pending))
+            rows_in = dict(src.groupBy("bucket_id").count().collect())
+            out = rollup_raw_to_1m(src.drop("bucket_id"))
+        else:
+            prev = TIER_ORDER[i - 1]
+            rows_in = {b: done[(prev, b)]["rows_out"] for b in pending}
+            child = tables.read_buckets(spark, prev, pending)
+            out = None if child is None else rollup_cascade(child, tier)
+        if out is not None:  # None: no pending bucket has child rows
+            (
+                with_bucket(out, n_buckets)
+                .repartition("bucket_id")  # one file per bucket
+                .sortWithinPartitions("bucket_id", "conv_id", "bucket_ts")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket_id")
+                .parquet(tables.tier_dir(tier))
             )
-        src = bucketed.where(F.col("bucket_id") == bucket_id).drop("bucket_id")
-        child: DataFrame | None = None
-        for tier in TIER_ORDER:
-            key = (tier, bucket_id)
-            if key in done:
-                with lock:
-                    counts["skipped"] += 1
-                # defer the committed-partition reader: on a fully
-                # committed resume nothing consumes it, and eager
-                # spark.read.parquet per tier issued n_buckets*3 footer
-                # reads for discarded DataFrames (review finding)
-                child = None
-                child_dir = tables.partition_dir(tier, bucket_id)
-                continue
-            if max_units is not None and counts["committed"] >= max_units:
-                return False
-            started = time.time()
-            if tier == "1m":
-                out = rollup_raw_to_1m(src)
-                rows_in = src.count()
-            else:
-                if child is None:  # previous tier was a skipped commit
-                    child = spark.read.parquet(child_dir)
-                out = rollup_cascade(child, tier)
-                rows_in = child.count()
-            out = out.sortWithinPartitions("conv_id", "bucket_ts")
-            pdir = tables.partition_dir(tier, bucket_id)
-            out.write.mode("overwrite").parquet(pdir)  # idempotent overwrite
+        written = bucket_hashes(spark, tables, tier, pending)
+        for bucket_id in pending:
             if fail_after is not None and counts["committed"] + 1 >= fail_after:
-                # simulate a crash AFTER data write, BEFORE lineage commit:
-                # the resume run must redo this unit
+                # simulate a crash AFTER the tier's data write, BEFORE this
+                # lineage commit: the resume run must redo this unit
                 counts["crashed"] = True
-                return False
-            written = spark.read.parquet(pdir)
-            rows_out, vhash = count_and_hash(written, HASH_COLS)
+                return counts
+            rows_out, vhash = written.get(bucket_id, (0, 0))
             rec = {
                 "run_id": run_id,
                 "tier": tier,
                 "bucket_id": bucket_id,
-                "rows_in": rows_in,
+                "rows_in": rows_in.get(bucket_id, 0),
                 "rows_out": rows_out,
                 "value_hash": vhash,
                 "started_at": started,
                 "committed_at": time.time(),
             }
-            with lock:
-                tables.append_lineage(rec)
-                counts["committed"] += 1
-            child = written
-        return True
-
-    if parallelism <= 1:
-        for bucket_id in range(n_buckets):
-            if not run_bucket(bucket_id):
-                break
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            list(pool.map(run_bucket, range(n_buckets)))
-    return dict(counts)
+            tables.append_lineage(rec)
+            done[(tier, bucket_id)] = rec
+            counts["committed"] += 1
+    return counts
 
 
 def verify_lineage(spark: SparkSession, tables: TableSet) -> list[str]:
     """Re-hash every committed partition against its lineage record —
-    the post-backfill integrity sweep."""
+    the post-backfill integrity sweep, one grouped job per tier.  A
+    committed bucket with no rows left reads as ``(0, 0)``."""
+    lineage = tables.read_lineage()
+    got = {
+        tier: bucket_hashes(
+            spark, tables, tier, [r["bucket_id"] for r in lineage if r["tier"] == tier]
+        )
+        for tier in TIER_ORDER
+    }
     problems = []
-    for rec in tables.read_lineage():
-        pdir = tables.partition_dir(rec["tier"], rec["bucket_id"])
-        n, vhash = count_and_hash(spark.read.parquet(pdir), HASH_COLS)
+    for rec in lineage:
+        n, vhash = got[rec["tier"]].get(rec["bucket_id"], (0, 0))
         if n != rec["rows_out"]:
             problems.append(f"{rec['tier']}/{rec['bucket_id']}: rowcount drift")
         elif vhash != rec["value_hash"]:

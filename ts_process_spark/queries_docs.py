@@ -443,13 +443,6 @@ def _srp_bucket_expr() -> str:
     return " + ".join(terms)
 
 
-def _srp_sql() -> str:
-    return f"""
-WITH e AS (SELECT vec_id AS id, {_Q_SQL} AS q FROM embeddings)
-SELECT id, {_srp_bucket_expr()} AS bucket FROM e
-"""
-
-
 def q_emb_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed approximate top-3 neighbors (equi-join within SRP
     buckets).  Fully deterministic — exact integer bucket + quantized

@@ -28,22 +28,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ts_process_spark import datagen
 from ts_process_spark.operators import analytics
-
-
-def q_signal_lowpass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Butterworth lowpass filtfilt over the signal fixtures
-    (ts_library.py:835-894) — grouped Arrow kernel."""
-    sig = datagen.signals(spark, cases=["lowpass"], n=2048)
-    return analytics.filter_signals(sig, "lowpass", fmax=5.0)
-
-
-def q_signal_bandpass_padded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Band-pass incl. the 1.5·N/fmin zero-pad rule
-    (ts_library.py:805-818)."""
-    sig = datagen.signals(spark, cases=["bandpass"], n=2048)
-    return analytics.filter_signals(sig, "bandpass", fmin=0.2, fmax=8.0)
 
 
 def q_signal_ellip_bandpass(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,12 +51,6 @@ def q_signal_ellip_bandpass(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("i").cast("long").alias("i"),
         (F.col("acc") + F.lit(0.0)).alias("acc_f"),
     )
-
-
-def q_signal_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decimate fast path (integer ratio) per ts_library.py:919-925."""
-    sig = datagen.signals(spark, cases=["lowpass"], n=2048)
-    return analytics.resample_signals(sig, 0.02)
 
 
 def q_signal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,13 +349,6 @@ def q_signal_fas(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative path at tolerance (tests/test_dsp.py)."""
     sig = _event_sig(spark, sf_dir, cnt_min=28, rn_cap=64, dt=0.01)
     return analytics.fas_signals(sig, fmin=2.0, fmax=10.0)
-
-
-def q_signal_rotd50(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RotD50 response spectra per station (rotd50.f:185-235) — the
-    Fortran-subprocess replacement."""
-    sig = datagen.signals(spark, cases=["rotate30", "lowpass"], n=1024)
-    return analytics.rotd50_stations(sig, periods=[0.2, 0.5, 1.0, 2.0])
 
 
 def q_signal_rotd50_grid63(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,12 +50,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # FAIR job scheduling: the parallel backfill tags each bucket
-        # chain with a scheduler pool; pool names are INERT under the
-        # default FIFO mode (review finding), so the straggler-isolation
-        # the backfill documents requires this to be set at context
-        # start.  Sequentially submitted jobs are unaffected
-        .config("spark.scheduler.mode", "FAIR")
         # local mode: all "executors" share the driver JVM; keep result
         # collection bounded anyway.
         .config("spark.driver.maxResultSize", "4g")
@@ -74,9 +68,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
